@@ -119,11 +119,6 @@ def scatter_cap() -> int:
     return int(os.environ.get("SPARK_GRAFT_SCATTER_CAP", str(256 * 1024 * 1024)))
 
 
-# Kept as a module attribute for source compatibility; prefer
-# scatter_cap() (call-time env read) at new call sites.
-SCATTER_CAP = scatter_cap()
-
-
 def kernel_scatter_cap() -> int:
     """Byte cap for KERNEL-class scatters (candidate-pair verify,
     shingling, signature kernels), deliberately far above the

@@ -77,9 +77,8 @@ def compact_partitions(
     leave everything else byte-identical. This selects leaves holding
     more than ``max(max_files, ceil(bytes/target_bytes))`` data files,
     rewrites exactly those with one read + one clustered write (file
-    count per leaf bounded by that same ceiling — AQE coalesces small
-    leaves below it), and swaps them in under the store lock with
-    roll-forward crash recovery. Untouched partitions are never
+    count per leaf bounded by that same ceiling), and swaps them in
+    under the store lock with roll-forward crash recovery. Untouched partitions are never
     listed, read, or rewritten.
 
     Returns a one-row audit frame: partitions compacted/untouched,
@@ -140,20 +139,24 @@ def compact_partitions(
                           sum(n for n, _ in stats.values()))
         pcols = [seg.split("=", 1)[0] for seg in frag[0].split("/")]
         vals = [tuple(seg.split("=", 1)[1] for seg in d.split("/")) for d in frag]
-        pred = functools.reduce(
-            operator.or_,
-            [
-                functools.reduce(
-                    operator.and_,
-                    [F.col(c).cast("string") == F.lit(v) for c, v in zip(pcols, t)],
-                )
-                for t in vals
-            ],
-        )
-        df = spark.read.parquet(path).filter(pred)
+        leaf_preds = [
+            functools.reduce(
+                operator.and_,
+                [F.col(c).cast("string") == F.lit(v) for c, v in zip(pcols, t)],
+            )
+            for t in vals
+        ]
+        df = spark.read.parquet(path).filter(functools.reduce(operator.or_, leaf_preds))
         files_per = max(budget[d] for d in frag)
+        # each leaf fans out to its OWN budget, so a small leaf
+        # rewritten next to a large one stays within its ceiling
+        per_leaf = F.lit(1)
+        for d, leaf in zip(frag, leaf_preds):
+            if budget[d] > 1:
+                per_leaf = F.when(leaf, F.lit(budget[d])).otherwise(per_leaf)
         out = _cluster_output(df, keys=df.columns, pcols=pcols,
-                              files_per_partition=files_per)
+                              files_per_partition=files_per, n_partitions=len(frag),
+                              budget=per_leaf)
         if sort_cols:
             # keep min/max footer stats tight so data skipping
             # survives compaction (partition-col prefix satisfies the

@@ -331,21 +331,34 @@ def _recover_unlocked(path: str, keep: frozenset[str] | set[str] = frozenset()) 
 
 
 def _cluster_output(df: DataFrame, keys: list[str], pcols: list[str],
-                    files_per_partition: int) -> DataFrame:
+                    files_per_partition: int, n_partitions: int,
+                    budget: Column | None = None) -> DataFrame:
     """Cluster a write so each output partition lands in AT MOST
     ``files_per_partition`` files. Without this, every touched
     partition fragments into up-to-shuffle-partitions files PER MERGE
     — at a daily merge cadence that is the small-file explosion
     compaction exists to undo. Clustering key = the partition value
     (one task owns whole partitions) plus, when >1 is asked for, a
-    deterministic key-hash salt that fans a hot partition across up
-    to that many tasks (an upper bound — AQE is free to coalesce
-    below it when the partition is small, which is exactly the
-    adaptive behavior we want)."""
+    deterministic key-hash salt that fans a hot partition across that
+    many tasks.
+
+    The salted write goes through ``repartitionById`` over exactly
+    ``n_partitions`` (the touched partition count) ×
+    ``files_per_partition`` tasks, task id = (partition hash mod
+    ``n_partitions``) × ``files_per_partition`` + salt, so every salt
+    of one partition has its own task. (A hash repartition of
+    (value, salt) into the shuffle width can put two salts in one
+    task and write fewer files than asked.) Two partition values may
+    share a slot; a task still writes one file per partition it
+    holds. ``budget``: optional per-row salt count, at most
+    ``files_per_partition``, for partitions allowed fewer files."""
     if files_per_partition <= 1:
         return df.repartition(*[F.col(c) for c in pcols])
-    salt = F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(files_per_partition))
-    return df.repartition(*[F.col(c) for c in pcols], salt)
+    salts = F.lit(files_per_partition) if budget is None else budget
+    salt = F.pmod(F.xxhash64(*[F.col(k) for k in keys]), salts)
+    slot = F.pmod(F.hash(*[F.col(c) for c in pcols]), F.lit(n_partitions))
+    task = (slot * files_per_partition + salt).cast("int")
+    return df.repartitionById(n_partitions * files_per_partition, task)
 
 
 def _partition_filter(pcols: list[str], tuples) -> Column:
@@ -552,7 +565,8 @@ def _merge_locked(
         # swap path as updates: a crash mid-write must leave either no
         # table or the whole first batch — never a half-written live
         # table the next merge would treat as fully existing.
-        first = _cluster_output(src, keys, pcols, files_per_partition)
+        n_parts = src.select(*pcols).distinct().count() if files_per_partition > 1 else 1
+        first = _cluster_output(src, keys, pcols, files_per_partition, n_parts)
         staged, _ = _stage_and_commit(
             spark, path, first, pcols,
             touched=set(), existing_dirs=set(),
@@ -587,7 +601,7 @@ def _merge_locked(
     if n_ins == 0 and n_upd == 0 and n_del == 0:
         return MergeStats(0, 0, 0, 0, noop=True)
 
-    result = _cluster_output(result, keys, pcols, files_per_partition)
+    result = _cluster_output(result, keys, pcols, files_per_partition, len(touched))
     staged, deleted = _stage_and_commit(
         spark, path, result, pcols,
         touched=set(touched), existing_dirs=existing_dirs,
@@ -701,7 +715,8 @@ def _merge_optimistic(
                 )
                 if n_ins == 0 and n_upd == 0 and n_del == 0:
                     return MergeStats(0, 0, 0, 0, noop=True, commit_retries=attempt)
-                result = _cluster_output(result, keys, pcols, files_per_partition)
+                result = _cluster_output(result, keys, pcols, files_per_partition,
+                                         len(touched))
                 staging, trash = _staging_pair(path)
                 _LIVE_STAGING.update((staging, trash))
                 result.write.mode("overwrite").partitionBy(*pcols).parquet(staging)

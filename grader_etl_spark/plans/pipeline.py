@@ -14,7 +14,7 @@ Stage-for-stage parity with ``main()``:
 | validation drops + WARN logs     | main.py:146-163   | ``transform`` returns a quarantine side-output instead of dropping silently |
 | save_to_db ON CONFLICT           | main.py:180-228   | ``idempotent_append`` (first-writer-wins + anti-join vs sink keys) |
 | generate_daily_report            | main.py:270-372   | ``operators.aggregates.daily_report`` |
-| report sheet 8x2 layout          | main.py:324-333   | ``report_sheet_rows`` (unpivot) |
+| report sheet 8x2 layout          | main.py:324-333   | ``_collect_report`` (unpivot) |
 | email body                       | main.py:388-404   | ``render_email_body`` (driver-side, 1 row) |
 | upload_raw_data_to_sheets, SMTP  | main.py:230-268, 374-419 | ``Sink`` protocol — tiny collected data, driver-side adapters |
 
@@ -296,8 +296,14 @@ def statistics_report(stats: DataFrame, report_date: str) -> DataFrame:
     rendition used by the oracle gate is operators.aggregates.daily_report.)"""
     total = F.count(F.lit(1))
     success = F.count(F.when(F.col("is_correct"), 1))
+    day = F.lit(report_date).cast("date")
+    in_day = F.to_date("event_timestamp") == day
+    if "event_date" in stats.columns:
+        # a store read: the partition-column equality prunes the scan
+        # to the one event_date directory instead of every partition
+        in_day = in_day & (F.col("event_date") == day)
     return (
-        stats.filter(F.to_date("event_timestamp") == F.lit(report_date).cast("date"))
+        stats.filter(in_day)
         .agg(
             total.alias("total_attempts"),
             success.alias("successful_attempts"),
@@ -326,14 +332,17 @@ _SHEET_METRICS = [
 ]
 
 
-def report_sheet_rows(report: DataFrame) -> DataFrame:
-    """The 1-row report unpivoted to (metric, value) rows — the 8x2
-    sheet layout of main.py:324-333, as a stack() expression."""
+def _collect_report(report: DataFrame) -> tuple[Row, list[Row]]:
+    """Run the 1-row report ONCE and return (typed report row, sheet
+    rows). The sheet is the report unpivoted to (metric, value) rows —
+    the 8x2 layout of main.py:324-333 — by a stack() riding the same
+    job, so the strings are exactly Spark's casts of the report values
+    and the aggregate is not computed a second time."""
     pairs = ", ".join(f"'{label}', CAST({col} AS STRING)" for label, col in _SHEET_METRICS)
-    return report.selectExpr(
-        "report_date",
-        f"stack({len(_SHEET_METRICS)}, {pairs}) AS (metric, value)",
-    )
+    sheet = report.selectExpr(
+        "*", f"stack({len(_SHEET_METRICS)}, {pairs}) AS (metric, value)"
+    ).collect()
+    return Row(*report.columns)(*(sheet[0][c] for c in report.columns)), sheet
 
 
 def render_email_body(report_row: Row) -> str:
@@ -418,10 +427,9 @@ def run_pipeline(
         raw_mirror.write_rows(list(pdf.columns), pdf.values.tolist())
 
     report_df = statistics_report(stored if stored is not None else valid, report_date)
-    row = report_df.collect()[0]
+    row, sheet = _collect_report(report_df)
 
     if report_sink is not None:
-        sheet = report_sheet_rows(report_df).collect()
         report_sink.write_rows(
             ["report_date", "metric", "value"],
             [[r["report_date"], r["metric"], r["value"]] for r in sheet],

@@ -1,25 +1,31 @@
-"""Custom stateful streaming operator (``applyInPandasWithState`` —
-the Structured Streaming escape hatch the brief names for operators
-watermark+window can't express).
+"""Per-user running profile over a stream of attempt events.
 
-The example operator is a per-user running profile: cumulative attempt
-count, success count, and last-seen timestamp, emitted once per
-micro-batch per active user — the streaming materialization of the
-reference's per-user accumulation that its daily report re-computes
-from scratch each run (/root/reference/main.py:278-289).
+The profile is cumulative attempt count, success count, and last-seen
+timestamp, emitted once per micro-batch per active user — the
+streaming materialization of the reference's per-user accumulation
+that its daily report re-computes from scratch each run (the
+reference's main.py:278-289).
 
-State design (the part that must survive 100 TB / 1000 executors):
-state is keyed by user_id, holds three scalars (not the event
-history), and is evicted after STATE_TTL of inactivity via the
-processing-time timeout — bounded state, no unbounded growth.
+Default plan (``ttl=False``): a native update-mode
+``groupBy().agg()``. Catalyst plans, code-generates and checkpoints
+it; the per-user state (two counts and a running maximum) lives in
+the state store and no row crosses into Python.
+
+``ttl=True``: processing-time eviction is the one thing a native
+aggregate cannot do, so that mode keeps an ``applyInPandasWithState``
+kernel. Its state is keyed by user_id, holds three scalars (not the
+event history), and is evicted after STATE_TTL of inactivity via the
+processing-time timeout — bounded state, no unbounded growth. Both
+plans carry ``last_seen`` as a running maximum over all events, so
+out-of-order events never move it backwards.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
-from typing import Any
 
 import pandas as pd
+import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
@@ -32,10 +38,14 @@ from pyspark.sql.types import (
 
 STATE_TTL_MS = 7 * 24 * 3600 * 1000  # the reference's 7-day horizon
 
+# last_seen is kept as epoch microseconds of the session-local wall
+# time: a TimestampType state field would round-trip through the
+# Python worker's own time zone, which need not be the session's.
 _STATE_SCHEMA = StructType(
     [
         StructField("n_attempts", LongType()),
         StructField("n_success", LongType()),
+        StructField("last_seen_us", LongType()),
     ]
 )
 
@@ -49,140 +59,56 @@ _OUTPUT_SCHEMA = StructType(
 )
 
 
-def _make_update_profile(ttl: bool):
-    def update_profile(
-        key: tuple, batches: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        n_attempts, n_success = state.get if state.exists else (0, 0)
-        last_seen: Any = None
-        for pdf in batches:
-            n_attempts += len(pdf)
-            n_success += int(pdf["is_correct"].fillna(False).sum())
-            batch_max = pdf["event_timestamp"].max()
-            last_seen = batch_max if last_seen is None else max(last_seen, batch_max)
-        state.update((n_attempts, n_success))
-        if ttl:
-            state.setTimeoutDuration(STATE_TTL_MS)
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_attempts": [n_attempts],
-                "n_success": [n_success],
-                "last_seen": [last_seen],
-            }
-        )
-
-    return update_profile
+def _update_profile(
+    key: tuple, batches: Iterator[pd.DataFrame], state: GroupState
+) -> Iterator[pd.DataFrame]:
+    """The ``ttl=True`` kernel: fold one user's micro-batch rows into
+    the state, re-arm the eviction timeout, emit the profile."""
+    if state.hasTimedOut:
+        state.remove()
+        return
+    n_attempts, n_success, last_us = state.get if state.exists else (0, 0, None)
+    for pdf in batches:
+        n_attempts += len(pdf)
+        n_success += int(pdf["is_correct"].eq(True).sum())
+        batch_max = pdf["event_timestamp"].max()
+        if not pd.isna(batch_max):
+            us = pd.Timestamp(batch_max).value // 1000
+            last_us = us if last_us is None else max(last_us, us)
+    state.update((n_attempts, n_success, last_us))
+    state.setTimeoutDuration(STATE_TTL_MS)
+    yield pd.DataFrame(
+        {
+            "user_id": [key[0]],
+            "n_attempts": [n_attempts],
+            "n_success": [n_success],
+            "last_seen": [pd.NaT if last_us is None else pd.Timestamp(last_us, unit="us")],
+        }
+    )
 
 
 def user_profile_stream(events: DataFrame, ttl: bool = False) -> DataFrame:
     """Stateful per-user profile over a stream of attempt events
     (columns: user_id, event_timestamp, is_correct). Emits the updated
-    profile for every user seen in each micro-batch.
+    profile for every user seen in each micro-batch (update mode).
 
     ``ttl=True`` arms the 7-day processing-time state eviction — the
     production mode for a continuously-triggered query (bounded state
-    at 100 TB). Leave it False under Trigger.AvailableNow: a
-    processing-time timeout makes the availableNow run WAIT for
-    timeouts to fire before terminating, which deadlocks a drain-and-
-    stop batch (observed as a never-returning awaitTermination)."""
+    at 100 TB) — and runs the pandas kernel above. Leave it False
+    under Trigger.AvailableNow: a processing-time timeout makes the
+    availableNow run WAIT for timeouts to fire before terminating,
+    which deadlocks a drain-and-stop batch (observed as a
+    never-returning awaitTermination)."""
+    if not ttl:
+        return events.groupBy("user_id").agg(
+            F.count(F.lit(1)).alias("n_attempts"),
+            F.count(F.when(F.col("is_correct"), 1)).alias("n_success"),
+            F.max("event_timestamp").alias("last_seen"),
+        )
     return events.groupBy("user_id").applyInPandasWithState(
-        _make_update_profile(ttl),
+        _update_profile,
         outputStructType=_OUTPUT_SCHEMA,
         stateStructType=_STATE_SCHEMA,
         outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout if ttl else GroupStateTimeout.NoTimeout
-        ),
-    )
-
-
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas rendition (Spark 4 arbitrary-state v2)
-# ---------------------------------------------------------------------------
-
-try:  # the v2 state server speaks protobuf; absent in this container
-    import google.protobuf  # noqa: F401
-
-    _HAS_PROTOBUF = True
-except ImportError:
-    # Re-verified round 3 (2026-08-14): `import google.protobuf` fails
-    # and the environment prohibits installing packages, so the v2
-    # streaming query has still never executed here. The processor
-    # logic is parity-tested against the v1 kernel without Spark
-    # (tests/test_stateful_streaming.py); the wiring below runs
-    # unchanged wherever protobuf exists.
-    _HAS_PROTOBUF = False
-
-from pyspark.sql.streaming.stateful_processor import (  # noqa: E402
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
-
-
-class UserProfileProcessor(StatefulProcessor):
-    """Spark 4 ``transformWithStateInPandas`` rendition of
-    ``user_profile_stream`` — same (n_attempts, n_success, last_seen)
-    profile, kept in a typed ValueState instead of the v1 tuple blob.
-
-    Why both exist: applyInPandasWithState (v1) is the stable API this
-    suite runs end-to-end; arbitrary-state v2 adds typed state
-    variables (Value/List/Map), per-variable TTL, and timers, and is
-    where Structured Streaming is headed. The v2 state server speaks
-    protobuf, which this container does not ship — so the PROCESSOR
-    logic is unit-tested directly (tests/test_stateful_streaming.py
-    drives handleInputRows with a fake ValueState and pins parity with
-    the v1 kernel), and the query wiring raises cleanly via
-    :func:`user_profile_stream_v2` until protobuf is available —
-    the same honest gate as the multimodal PIL decode."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._profile = handle.getValueState(
-            "profile", "n_attempts long, n_success long"
-        )
-
-    def handleInputRows(self, key, rows, timerValues):
-        n_attempts, n_success = (
-            tuple(self._profile.get()) if self._profile.exists() else (0, 0)
-        )
-        last_seen = None
-        for pdf in rows:
-            n_attempts += len(pdf)
-            n_success += int(pdf["is_correct"].fillna(False).sum())
-            batch_max = pdf["event_timestamp"].max()
-            last_seen = batch_max if last_seen is None else max(last_seen, batch_max)
-        self._profile.update((n_attempts, n_success))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_attempts": [n_attempts],
-                "n_success": [n_success],
-                "last_seen": [last_seen],
-            }
-        )
-
-    def close(self) -> None:  # nothing to release
-        pass
-
-
-def user_profile_stream_v2(events: DataFrame) -> DataFrame:
-    """``transformWithStateInPandas`` wiring for
-    :class:`UserProfileProcessor`. Raises if the container lacks
-    protobuf (required by the v2 state server) — callers fall back to
-    :func:`user_profile_stream` (v1), which is semantically identical
-    for this profile."""
-    if not _HAS_PROTOBUF:
-        raise NotImplementedError(
-            "transformWithStateInPandas needs protobuf, which this container "
-            "does not ship; use user_profile_stream (applyInPandasWithState) — "
-            "UserProfileProcessor's logic itself is unit-tested without Spark"
-        )
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=UserProfileProcessor(),
-        outputStructType=_OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
+        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
     )

@@ -107,6 +107,41 @@ def test_compact_partitions_in_place_journaled(spark, sf_dir, tmp_path):
     assert {d: fstate(d) for d in days} == state
 
 
+def test_compact_partitions_fans_each_leaf_to_its_own_budget(spark, tmp_path):
+    """Leaves rewritten in one compaction may have different file
+    budgets (ceil(bytes / target_bytes)): the large leaf fans out to
+    its budget, the small leaf beside it stays one file instead of
+    taking the large leaf's fan-out."""
+    import os as _os
+
+    from grader_etl_spark.plans.compaction import compact_partitions
+
+    store = str(tmp_path / "store")
+    rows = spark.range(20000).select(
+        F.when(F.col("id") < 200, F.lit("small")).otherwise(F.lit("big")).alias("day"),
+        F.col("id"),
+        F.sha2(F.col("id").cast("string"), 256).alias("payload"),
+    )
+    for i in range(2):
+        rows.filter(F.col("id") % 2 == i).repartition(6).write.mode("append") \
+            .partitionBy("day").parquet(store)
+
+    def leaf(day):
+        d = _os.path.join(store, f"day={day}")
+        names = [f for f in _os.listdir(d) if f.endswith(".parquet")]
+        return len(names), sum(_os.path.getsize(_os.path.join(d, f)) for f in names)
+
+    n_big, big_bytes = leaf("big")
+    n_small, small_bytes = leaf("small")
+    target = big_bytes // 3 + 1  # big leaf budget 3, small leaf budget 1
+    assert small_bytes < target and n_big > 3 and n_small > 1
+
+    compact_partitions(spark, store, target_bytes=target)
+    assert leaf("small")[0] == 1
+    assert 1 <= leaf("big")[0] <= 3
+    assert spark.read.parquet(store).count() == 20000
+
+
 def test_compact_partitions_crash_rolls_forward(spark, sf_dir, tmp_path, monkeypatch):
     import pyspark.sql.functions as F
     import pytest as _pytest

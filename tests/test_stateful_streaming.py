@@ -1,6 +1,7 @@
-"""applyInPandasWithState operator: per-user running profile over two
+"""Per-user running profile (streaming/stateful.py) over two
 micro-batches — counts accumulate across batches via the state store,
-not by re-reading history."""
+not by re-reading history — plus the ``ttl=True`` pandas kernel, both
+driven by a fake GroupState and end-to-end."""
 
 from __future__ import annotations
 
@@ -71,66 +72,129 @@ def test_state_accumulates_across_microbatches(spark, tmp_path):
     assert "u2" not in out2
 
 
-class _FakeValueState:
-    """Minimal ValueState stand-in for driving the v2 processor logic
-    without the protobuf state server."""
+def test_last_seen_never_moves_backwards(spark, tmp_path):
+    """A later micro-batch holding OLDER events must not pull last_seen
+    back: it is the running maximum over every event, as the batch
+    twin (max over all events) computes it."""
+    landing = str(tmp_path / "landing")
+    late = T0 + dt.timedelta(hours=5)
+
+    spark.createDataFrame([("u1", late, True)], SCHEMA).coalesce(1).write.mode(
+        "append"
+    ).parquet(landing)
+    out1 = _run_batch(spark, landing, "profiles_1")
+    assert out1["u1"]["last_seen"] == late
+
+    spark.createDataFrame(
+        [("u1", T0, False), ("u1", T0 + dt.timedelta(hours=1), True)], SCHEMA
+    ).coalesce(1).write.mode("append").parquet(landing)
+    out2 = _run_batch(spark, landing, "profiles_2")
+    assert out2["u1"]["n_attempts"] == 3 and out2["u1"]["n_success"] == 2
+    assert out2["u1"]["last_seen"] == late
+
+
+class _FakeGroupState:
+    """GroupState stand-in for driving the ``ttl=True`` kernel without
+    a streaming query."""
 
     def __init__(self):
-        self._v = None
+        self.value = None
+        self.timeout_ms = None
+        self.hasTimedOut = False
 
+    @property
     def exists(self):
-        return self._v is not None
+        return self.value is not None
 
+    @property
     def get(self):
-        return self._v
+        return self.value
 
     def update(self, v):
-        self._v = v
+        self.value = tuple(v)
+
+    def remove(self):
+        self.value = None
+
+    def setTimeoutDuration(self, ms):
+        self.timeout_ms = ms
 
 
-class _FakeHandle:
-    def __init__(self):
-        self.state = _FakeValueState()
-
-    def getValueState(self, name, schema, ttl_duration_ms=None):
-        return self.state
-
-
-def test_v2_processor_parity_with_v1_kernel():
-    """UserProfileProcessor (transformWithStateInPandas rendition) must
-    produce the same running profile as the v1 applyInPandasWithState
-    kernel across two micro-batches of the same key."""
+def test_ttl_kernel_running_profile_with_fake_state():
+    """The pandas kernel behind ``ttl=True``: counts accumulate across
+    micro-batches through the state, NULL is_correct is not a success,
+    last_seen is a running maximum (an older second batch keeps it),
+    every update re-arms the 7-day timeout, and a timed-out state is
+    evicted without output."""
     import pandas as pd
 
-    from grader_etl_spark.streaming.stateful import UserProfileProcessor
+    from grader_etl_spark.streaming.stateful import STATE_TTL_MS, _update_profile
 
     t1 = pd.Timestamp("2024-01-15 10:00:00")
     t2 = pd.Timestamp("2024-01-15 12:00:00")
-    b1 = pd.DataFrame(
-        {"is_correct": [True, False, None], "event_timestamp": [t1, t1, t2]}
-    )
+    b1 = pd.DataFrame({"is_correct": [True, False, None], "event_timestamp": [t1, t1, t2]})
     b2 = pd.DataFrame({"is_correct": [True], "event_timestamp": [t1]})
 
-    proc = UserProfileProcessor()
-    proc.init(_FakeHandle())
-    (out1,) = list(proc.handleInputRows(("u1",), iter([b1]), None))
-    assert out1.iloc[0][["n_attempts", "n_success"]].tolist() == [3, 1]
+    state = _FakeGroupState()
+    (out1,) = list(_update_profile(("u1",), iter([b1]), state))
+    assert out1.iloc[0][["user_id", "n_attempts", "n_success"]].tolist() == ["u1", 3, 1]
     assert out1.iloc[0]["last_seen"] == t2
-    # second micro-batch: state carries over
-    (out2,) = list(proc.handleInputRows(("u1",), iter([b2]), None))
+    assert state.timeout_ms == STATE_TTL_MS
+
+    (out2,) = list(_update_profile(("u1",), iter([b2]), state))
     assert out2.iloc[0][["n_attempts", "n_success"]].tolist() == [4, 2]
-    assert out2.iloc[0]["last_seen"] == t1  # max within THIS batch only
+    assert out2.iloc[0]["last_seen"] == t2
+
+    # several Arrow chunks of one micro-batch fold into one profile row
+    state2 = _FakeGroupState()
+    (out3,) = list(_update_profile(("u2",), iter([b2, b1]), state2))
+    assert out3.iloc[0][["n_attempts", "n_success"]].tolist() == [4, 2]
+    assert out3.iloc[0]["last_seen"] == t2
+
+    state.hasTimedOut = True
+    assert list(_update_profile(("u1",), iter([]), state)) == []
+    assert not state.exists
 
 
-def test_v2_wiring_gates_cleanly_without_protobuf(spark):
-    import pytest as _pytest
+def test_ttl_profile_runs_under_processing_time_trigger(spark, tmp_path):
+    """``ttl=True`` end-to-end: the pandas kernel with its 7-day
+    eviction timeout, under a processing-time trigger (availableNow
+    would wait on the timeout, and processAllAvailable does not
+    return), driven by polling the sink and then stopping the query."""
+    import time
 
-    import grader_etl_spark.streaming.stateful as st
-
-    if st._HAS_PROTOBUF:
-        _pytest.skip("protobuf present: the v2 wiring is runnable here")
-    df = spark.createDataFrame(
-        [], "user_id string, event_timestamp timestamp, is_correct boolean"
+    landing = str(tmp_path / "landing")
+    late = T0 + dt.timedelta(hours=5)
+    spark.createDataFrame([("u1", late, True), ("u2", T0, None)], SCHEMA).coalesce(
+        1
+    ).write.parquet(landing)
+    rows: list = []
+    q = (
+        user_profile_stream(
+            file_stream(spark, landing, SCHEMA, max_files_per_trigger=1), ttl=True
+        )
+        .writeStream.foreachBatch(lambda batch_df, _id: rows.extend(batch_df.collect()))
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "chk"))
+        .trigger(processingTime="200 milliseconds")
+        .start()
     )
-    with _pytest.raises(NotImplementedError, match="protobuf"):
-        st.user_profile_stream_v2(df)
+
+    def wait_for(n):
+        deadline = time.monotonic() + 120
+        while len(rows) < n and q.exception() is None and time.monotonic() < deadline:
+            time.sleep(0.2)
+
+    try:
+        wait_for(2)
+        spark.createDataFrame([("u1", T0, False)], SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(landing)
+        wait_for(3)
+        assert q.exception() is None
+    finally:
+        q.stop()
+    latest = {r["user_id"]: r for r in rows}
+    assert latest["u1"]["n_attempts"] == 2 and latest["u1"]["n_success"] == 1
+    assert latest["u1"]["last_seen"] == late  # the older event does not pull it back
+    assert latest["u2"]["n_attempts"] == 1 and latest["u2"]["n_success"] == 0

@@ -8,7 +8,8 @@ Jobs (streaming/jobs.py, streaming/stateful.py):
   dedup       incremental_dedup_stream  stream-static anti-join vs ledger
   report      daily_tumbling_report     watermark + 1-day tumbling agg
   trending    trending_terms            watermark + windowed term counts
-  profile     user_profile_stream       applyInPandasWithState per-user state
+  profile     user_profile_stream       native update-mode per-user aggregate
+                                        (Python runs only for ttl=True)
 
 Inputs derive from the sf0.1 fixtures (documents / events mapped onto
 the job schemas), split into N files so each micro-batch is one file.
